@@ -4,20 +4,33 @@ computed off ONE cached parsed DataFrame.
 
 The reference re-materializes a pandas frame per analyze function
 (SURVEY.md §3.2 — the plan is re-scanned six-plus times); here every
-branch shares the same cached lineage, so the whole report is one scan
-plus cheap aggregations.  Output is a plain JSON-serializable dict whose
-keys mirror the reference's report so downstream consumers (dashboards,
-the CLI renderer) can switch without changes.
+branch shares the same cached lineage.  The report is ~40 leaves — one
+``collect`` each plus the Python shaping into a dict — about 83 Spark jobs
+in all.  Each job is small, so the report is bound by the driver (planning,
+codegen, job round-trips) rather than the executors: the leaves are
+independent and run concurrently on a driver thread pool of twice
+``defaultParallelism`` threads, and the dicts are assembled in the
+original key order, so the JSON is the same as a one-at-a-time run.
+Output is a plain JSON-serializable dict whose keys mirror the
+reference's report so downstream consumers (dashboards, the CLI renderer)
+can switch without changes.
 """
 
 from __future__ import annotations
 
 import json
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
+from typing import Callable, Iterable, Optional, Sequence
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 
 from . import aggregates as A
+
+# (key, thunk): the thunk computes the key's value; a None key merges the
+# thunk's dict into the enclosing one at that position
+Leaf = tuple[Optional[str], Callable[[], object]]
 
 
 def _kv(df: DataFrame, k: str, v: str) -> dict:
@@ -39,97 +52,175 @@ def _records(df: DataFrame) -> list[dict]:
     return [{k: _py(v) for k, v in r.asDict().items()} for r in df.collect()]
 
 
+def _param_values(df: DataFrame) -> dict[str, dict[str, int]]:
+    pv: dict[str, dict[str, int]] = {}
+    for r in df.collect():
+        pv.setdefault(r["param"], {})[str(r["value"])] = _py(r["occurrences"])
+    return pv
+
+
+def _run(df: DataFrame, leaves: Sequence[Leaf]) -> list:
+    """The leaves' values, in leaf order, computed on a bounded thread pool.
+
+    Each thunk is wrapped in the calling thread, so its jobs carry the
+    caller's job group and local properties (each with its own copy).  If
+    a leaf raises, the leaves not yet started are cancelled, and the first
+    failing leaf's exception is raised once every running one has ended.
+    """
+    spark = df.sparkSession
+    # the leaves' jobs are small: with twice as many threads as cores, some
+    # leaves plan on the driver while others keep the executors busy
+    workers = min(len(leaves), 2 * spark.sparkContext.defaultParallelism)
+    thunks = [inheritable_thread_target(spark)(thunk) for _, thunk in leaves]
+    with ThreadPoolExecutor(workers, thread_name_prefix="report-leaf") as pool:
+        futures = [pool.submit(t) for t in thunks]
+        try:
+            return [f.result() for f in futures]
+        finally:
+            for f in futures:
+                f.cancel()
+
+
+def _assemble(leaves: Sequence[Leaf], values: Iterable) -> dict:
+    """The leaves' dict; takes exactly ``len(leaves)`` items from ``values``."""
+    out: dict = {}
+    for (key, _), v in zip(leaves, values):
+        if key is None:
+            out.update(v)
+        else:
+            out[key] = v
+    return out
+
+
+def _evaluate(df: DataFrame, leaves: Sequence[Leaf]) -> dict:
+    return _assemble(leaves, _run(df, leaves))
+
+
+def _count_first(df: DataFrame, leaves: Sequence[Leaf]) -> list:
+    """``_run`` with the first leaf, the ``total_requests`` count, run
+    first and alone: on a cached frame the count fills the cache, so the
+    other leaves read it instead of each planning its own fill."""
+    return [leaves[0][1]()] + _run(df, leaves[1:])
+
+
+def _traffic(df: DataFrame) -> list[Leaf]:
+    return [
+        ("total_requests", df.count),
+        ("requests_per_hour", lambda: _kv(A.requests_per_hour(df), "hour", "requests")),
+        ("requests_per_day", lambda: _kv(A.requests_per_day(df), "day", "requests")),
+        ("popular_endpoints", lambda: _kv(A.popular_endpoints(df), "path", "requests")),
+        ("http_methods", lambda: _kv(A.http_methods(df), "http_method", "requests")),
+    ]
+
+
+def _errors(df: DataFrame) -> list[Leaf]:
+    return [
+        ("status_code_distribution",
+         lambda: _kv(A.status_code_distribution(df), "status_code", "requests")),
+        (None, lambda: _row(A.error_rates(df))),
+        ("error_endpoints", lambda: _kv(A.error_endpoints(df), "path", "errors")),
+    ]
+
+
+def _performance(df: DataFrame) -> list[Leaf]:
+    return [
+        ("cache_statistics",
+         lambda: _kv(A.cache_statistics(df), "cache_status", "requests")),
+        (None, lambda: _row(A.cache_hit_miss_rates(df))),
+        ("response_size_statistics", lambda: _row(A.response_size_stats(df))),
+        ("top_endpoints_by_size", lambda: _records(A.top_endpoints_by_size(df))),
+    ]
+
+
+def _user_agents(df: DataFrame) -> list[Leaf]:
+    return [
+        ("top_user_agents", lambda: _kv(A.top_user_agents(df), "user_agent", "requests")),
+        ("agent_type_distribution",
+         lambda: _kv(A.agent_type_distribution(df), "agent_type", "requests")),
+    ]
+
+
+def _query_patterns(df: DataFrame) -> list[Leaf]:
+    return [
+        ("most_common_parameters",
+         lambda: _kv(A.most_common_parameters(df), "param", "occurrences")),
+        ("parameter_value_distributions",
+         lambda: _param_values(A.parameter_value_distributions(df))),
+        ("top_query_signatures",
+         lambda: _kv(A.top_query_signatures(df), "signature", "requests")),
+    ]
+
+
+def _slowness_investigation(df: DataFrame) -> list[Leaf]:
+    return [
+        ("requests_by_hour",
+         lambda: _kv(A.requests_by_hour_of_day(df), "hour_of_day", "requests")),
+        ("peak_hour", lambda: _row(A.peak_hour(df))),
+        ("peak_minute", lambda: _row(A.peak_minute(df))),
+        ("largest_traffic_spikes", lambda: _records(A.largest_traffic_spikes(df))),
+        ("requests_by_day_of_week",
+         lambda: _kv(A.requests_by_day_of_week(df), "day_of_week", "requests")),
+        ("high_cache_miss_endpoints",
+         lambda: _kv(A.high_cache_miss_endpoints(df), "path", "miss_rate")),
+        ("cache_miss_rate_by_hour",
+         lambda: _kv(A.cache_miss_rate_by_hour(df), "hour_of_day", "miss_rate")),
+        ("hourly_cache_performance", lambda: _records(A.hourly_cache_performance(df))),
+        ("large_response_endpoints", lambda: _records(A.large_response_endpoints(df))),
+        ("outlier_large_responses", lambda: _records(A.outlier_large_responses(df))),
+        ("hourly_response_sizes", lambda: _records(A.hourly_response_sizes(df))),
+        ("high_error_rate_endpoints",
+         lambda: _kv(A.high_error_rate_endpoints(df), "path", "error_rate")),
+        ("server_errors_by_hour",
+         lambda: _kv(A.server_errors_by_hour(df), "hour_of_day", "server_errors")),
+        ("hourly_error_rates", lambda: _records(A.hourly_error_rates(df))),
+        ("complex_query_endpoints", lambda: _records(A.complex_query_endpoints(df))),
+        ("top_request_ips", lambda: _kv(A.top_request_ips(df), "ip_address", "requests")),
+        ("top_request_ips_with_ua", lambda: _records(A.top_request_ips_with_ua(df))),
+        ("top_ips_by_request_rate", lambda: _records(A.top_ips_by_request_rate(df))),
+        ("user_agent_response_sizes", lambda: _records(A.user_agent_response_sizes(df))),
+    ]
+
+
+# branch name -> its leaf table, in the report's key order
+BRANCHES = {
+    "traffic": _traffic,
+    "errors": _errors,
+    "performance": _performance,
+    "user_agents": _user_agents,
+    "query_patterns": _query_patterns,
+    "slowness_investigation": _slowness_investigation,
+}
+
+
 def traffic(df: DataFrame) -> dict:
     """analyze_traffic_patterns (reference src/analyze/analytics.py:36-82)."""
-    return {
-        "total_requests": df.count(),
-        "requests_per_hour": _kv(A.requests_per_hour(df), "hour", "requests"),
-        "requests_per_day": _kv(A.requests_per_day(df), "day", "requests"),
-        "popular_endpoints": _kv(A.popular_endpoints(df), "path", "requests"),
-        "http_methods": _kv(A.http_methods(df), "http_method", "requests"),
-    }
+    leaves = _traffic(df)
+    return _assemble(leaves, _count_first(df, leaves))
 
 
 def errors(df: DataFrame) -> dict:
     """analyze_errors (reference src/analyze/analytics.py:85-124)."""
-    return {
-        "status_code_distribution": _kv(
-            A.status_code_distribution(df), "status_code", "requests"
-        ),
-        **_row(A.error_rates(df)),
-        "error_endpoints": _kv(A.error_endpoints(df), "path", "errors"),
-    }
+    return _evaluate(df, _errors(df))
 
 
 def performance(df: DataFrame) -> dict:
     """analyze_performance (reference src/analyze/analytics.py:127-185)."""
-    return {
-        "cache_statistics": _kv(A.cache_statistics(df), "cache_status", "requests"),
-        **_row(A.cache_hit_miss_rates(df)),
-        "response_size_statistics": _row(A.response_size_stats(df)),
-        "top_endpoints_by_size": _records(A.top_endpoints_by_size(df)),
-    }
+    return _evaluate(df, _performance(df))
 
 
 def user_agents(df: DataFrame) -> dict:
     """analyze_user_agents (reference src/analyze/analytics.py:188-259)."""
-    return {
-        "top_user_agents": _kv(A.top_user_agents(df), "user_agent", "requests"),
-        "agent_type_distribution": _kv(
-            A.agent_type_distribution(df), "agent_type", "requests"
-        ),
-    }
+    return _evaluate(df, _user_agents(df))
 
 
 def query_patterns(df: DataFrame) -> dict:
     """analyze_query_patterns (reference src/analyze/analytics.py:262-306)."""
-    pv: dict[str, dict[str, int]] = {}
-    for r in A.parameter_value_distributions(df).collect():
-        pv.setdefault(r["param"], {})[str(r["value"])] = _py(r["occurrences"])
-    return {
-        "most_common_parameters": _kv(
-            A.most_common_parameters(df), "param", "occurrences"
-        ),
-        "parameter_value_distributions": pv,
-        "top_query_signatures": _kv(
-            A.top_query_signatures(df), "signature", "requests"
-        ),
-    }
+    return _evaluate(df, _query_patterns(df))
 
 
 def slowness_investigation(df: DataFrame) -> dict:
     """analyze_slowness_patterns (reference src/analyze/analytics.py:309-639)."""
-    return {
-        "requests_by_hour": _kv(A.requests_by_hour_of_day(df), "hour_of_day", "requests"),
-        "peak_hour": _row(A.peak_hour(df)),
-        "peak_minute": _row(A.peak_minute(df)),
-        "largest_traffic_spikes": _records(A.largest_traffic_spikes(df)),
-        "requests_by_day_of_week": _kv(
-            A.requests_by_day_of_week(df), "day_of_week", "requests"
-        ),
-        "high_cache_miss_endpoints": _kv(
-            A.high_cache_miss_endpoints(df), "path", "miss_rate"
-        ),
-        "cache_miss_rate_by_hour": _kv(
-            A.cache_miss_rate_by_hour(df), "hour_of_day", "miss_rate"
-        ),
-        "hourly_cache_performance": _records(A.hourly_cache_performance(df)),
-        "large_response_endpoints": _records(A.large_response_endpoints(df)),
-        "outlier_large_responses": _records(A.outlier_large_responses(df)),
-        "hourly_response_sizes": _records(A.hourly_response_sizes(df)),
-        "high_error_rate_endpoints": _kv(
-            A.high_error_rate_endpoints(df), "path", "error_rate"
-        ),
-        "server_errors_by_hour": _kv(
-            A.server_errors_by_hour(df), "hour_of_day", "server_errors"
-        ),
-        "hourly_error_rates": _records(A.hourly_error_rates(df)),
-        "complex_query_endpoints": _records(A.complex_query_endpoints(df)),
-        "top_request_ips": _kv(A.top_request_ips(df), "ip_address", "requests"),
-        "top_request_ips_with_ua": _records(A.top_request_ips_with_ua(df)),
-        "top_ips_by_request_rate": _records(A.top_ips_by_request_rate(df)),
-        "user_agent_response_sizes": _records(A.user_agent_response_sizes(df)),
-    }
+    return _evaluate(df, _slowness_investigation(df))
 
 
 def full_report(df: DataFrame) -> dict:
@@ -137,14 +228,9 @@ def full_report(df: DataFrame) -> dict:
     src superset A:1030-1037), one cached scan for all branches."""
     df = df.cache()
     try:
-        return {
-            "traffic": traffic(df),
-            "errors": errors(df),
-            "performance": performance(df),
-            "user_agents": user_agents(df),
-            "query_patterns": query_patterns(df),
-            "slowness_investigation": slowness_investigation(df),
-        }
+        tables = {name: leaves(df) for name, leaves in BRANCHES.items()}
+        values = iter(_count_first(df, [leaf for t in tables.values() for leaf in t]))
+        return {name: _assemble(leaves, values) for name, leaves in tables.items()}
     finally:
         df.unpersist()
 
@@ -154,24 +240,23 @@ def endpoint_report(df: DataFrame, endpoint: str) -> dict:
     incl. query_parameters.parameter_values (ref :746-757): top-5 values for
     the first-5 params, first-seen ordered when lineage columns exist."""
     parts = A.analyze_endpoint(df, endpoint)
-    pv: dict[str, dict[str, int]] = {}
-    for r in parts["parameter_values"].collect():
-        pv.setdefault(r["param"], {})[str(r["value"])] = _py(r["occurrences"])
-    most_common = _kv(parts["most_common_params"], "param", "occurrences")
-    return {
-        "endpoint": endpoint,
-        "requests_by_hour": _kv(parts["requests_by_hour"], "hour_of_day", "requests"),
-        "peak_hours": _records(parts["peak_hours"]),
-        "status_codes": _kv(parts["status_codes"], "status_code", "requests"),
-        "error_analysis": _row(parts["error_analysis"]),
-        "response_size_stats": _row(parts["response_size_stats"]),
-        "cache_analysis": _row(parts["cache_analysis"]),
-        "most_common_params": most_common,
-        "query_parameters": {
-            "most_common": most_common,
-            "parameter_values": pv,
-        },
+    out = {"endpoint": endpoint, **_evaluate(df, [
+        ("requests_by_hour",
+         lambda: _kv(parts["requests_by_hour"], "hour_of_day", "requests")),
+        ("peak_hours", lambda: _records(parts["peak_hours"])),
+        ("status_codes", lambda: _kv(parts["status_codes"], "status_code", "requests")),
+        ("error_analysis", lambda: _row(parts["error_analysis"])),
+        ("response_size_stats", lambda: _row(parts["response_size_stats"])),
+        ("cache_analysis", lambda: _row(parts["cache_analysis"])),
+        ("most_common_params",
+         lambda: _kv(parts["most_common_params"], "param", "occurrences")),
+        ("parameter_values", lambda: _param_values(parts["parameter_values"])),
+    ])}
+    out["query_parameters"] = {
+        "most_common": out["most_common_params"],
+        "parameter_values": out.pop("parameter_values"),
     }
+    return out
 
 
 def daily_summary_report(df: DataFrame) -> dict:

@@ -69,7 +69,14 @@ def builder_conf(
 
 
 def _driver_mem() -> str:
-    return os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+    """``SPARK_GRAFT_DRIVER_MEM``, else a quarter of physical RAM capped at
+    32g (the cap is reached at 128 GiB): ``-Xms`` pins the whole heap at
+    launch, and the JVM cannot start when that exceeds what the host has."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(512, min(32 * 1024, ram_mb // 4))}m"
 
 
 def _java_opts() -> str:

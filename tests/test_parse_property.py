@@ -4,7 +4,9 @@ parser never throws and exactly matches the reference parser."""
 from __future__ import annotations
 
 import importlib.util
+import os
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from test_parse_parity import FIELDS, _norm, ref_record
@@ -16,6 +18,8 @@ def _load_ref():
     spec = importlib.util.spec_from_file_location(
         "ref_log_parser_prop", "/root/reference/src/parse/log_parser.py"
     )
+    if not os.path.exists(spec.origin):
+        pytest.skip("reference repo not available", allow_module_level=True)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod

@@ -6,17 +6,20 @@ import gzip
 import json
 import os
 import shutil
+import threading
 import time
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
+from python_fastly_log_query_spark.operators import aggregates as A
 from python_fastly_log_query_spark.operators import multimodal as MM
 from python_fastly_log_query_spark.operators import report as R
 from python_fastly_log_query_spark.operators.parse import parse_logs
 from python_fastly_log_query_spark import cli
 
-from conftest import SF_SMALL
+from conftest import FIXTURE_LINES, SF_SMALL
 
 LINE = (
     '<134>2025-11-01T{h:02d}:00:{s:02d}Z cache-sjc s3logsprod[4242]: 10.1.2.{s} "-" "-" - '
@@ -71,6 +74,82 @@ def test_endpoint_and_daily_reports(spark, tmp_path):
     ds = R.daily_summary_report(parsed)
     assert len(ds["days"]) == 1
     assert ds["days"][0]["total_requests"] == 12
+
+
+def _mixed_logs(spark, tmp_path):
+    """Three hours of well-formed lines plus the fixture corpus: malformed,
+    non-ASCII and null-field lines."""
+    from python_fastly_log_query_spark.sources.logfiles import read_log_lines
+
+    d = str(tmp_path / "mixed")
+    _write_logs(d, n_files=3, lines_per=9)
+    with open(os.path.join(d, "fixture.log"), "w", encoding="utf-8") as f:
+        f.write("\n".join(FIXTURE_LINES) + "\n")
+    return parse_logs(read_log_lines(spark, d, line_numbers=False), "text")
+
+
+MIXED_ENDPOINTS = ("/api/search", "/päth", "/fb", "/missing")
+
+
+def test_concurrent_report_equals_one_at_a_time(spark, tmp_path, monkeypatch):
+    parsed = _mixed_logs(spark, tmp_path)
+
+    def reports():
+        return [R.full_report(parsed)] + [
+            R.endpoint_report(parsed, e) for e in MIXED_ENDPOINTS
+        ]
+
+    pooled = reports()
+    monkeypatch.setattr(R, "_run", lambda df, leaves: [t() for _, t in leaves])
+    serial = reports()
+    # key order included
+    assert json.dumps(pooled, default=str) == json.dumps(serial, default=str)
+    assert pooled[0]["traffic"]["total_requests"] == parsed.count()
+    assert list(pooled[0]["errors"])[0] == "status_code_distribution"
+    assert sum(pooled[1]["status_codes"].values()) == 27
+
+
+def _job_ids(sc, group):
+    return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_report_jobs_carry_the_callers_job_group(spark, tmp_path):
+    parsed = _mixed_logs(spark, tmp_path)
+    sc = spark.sparkContext
+    n_leaves = sum(len(leaves(parsed)) for leaves in R.BRANCHES.values())
+    ungrouped = _job_ids(sc, None)
+    try:
+        sc.setJobGroup("report-full", "full_report under test")
+        R.full_report(parsed)
+        sc.setJobGroup("report-endpoint", "endpoint_report under test")
+        R.endpoint_report(parsed, "/api/search")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store learns of jobs from the listener bus, asynchronously
+    deadline = time.time() + 30
+    while time.time() < deadline and (
+        len(_job_ids(sc, "report-full")) < n_leaves
+        or len(_job_ids(sc, "report-endpoint")) < 8
+    ):
+        time.sleep(0.2)
+    assert len(_job_ids(sc, "report-full")) >= n_leaves
+    assert len(_job_ids(sc, "report-endpoint")) >= 8
+    # no new job outside a group (the store drops its oldest jobs past 1000)
+    assert not _job_ids(sc, None) - ungrouped
+
+
+def test_failing_leaf_propagates_and_unpersists(spark, tmp_path, monkeypatch):
+    parsed = _mixed_logs(spark, tmp_path)
+
+    def boom(df):
+        raise RuntimeError("leaf failed")
+
+    monkeypatch.setattr(A, "top_user_agents", boom)
+    with pytest.raises(RuntimeError, match="leaf failed"):
+        R.full_report(parsed)
+    assert parsed.storageLevel == StorageLevel.NONE
+    assert not [t for t in threading.enumerate() if t.name.startswith("report-leaf")]
 
 
 # ---------------------------------------------------------------- cli
